@@ -242,6 +242,52 @@ def assign_points_within(
     return out, hits
 
 
+def rings_bbox(rings, eps: float = 1e-9):
+    """Bounding box of every ring of one zone, padded so that no point
+    outside it can be inside any ring or within ``eps`` of any edge.
+
+    The pad, ``eps * max(width, height, 1)``, is at least the absolute
+    ``eps`` of the ``inbox`` test in :func:`on_boundary_masks`, so the
+    prune below drops only points that every ring test already rejects
+    (float subtraction is monotone, hence ``minx - pad <= minx_edge - eps``
+    holds after rounding too).  Returns None when the rings hold no
+    vertex, and an unbounded box when a coordinate is not finite."""
+    xs = [np.asarray(r[0], dtype=np.float64) for r in rings]
+    ys = [np.asarray(r[1], dtype=np.float64) for r in rings]
+    if not any(len(a) for a in xs):
+        return None
+    ax, ay = np.concatenate(xs), np.concatenate(ys)
+    minx, maxx, miny, maxy = ax.min(), ax.max(), ay.min(), ay.max()
+    if not np.isfinite([minx, maxx, miny, maxy]).all():
+        return (-np.inf, -np.inf, np.inf, np.inf)
+    pad = eps * max(maxx - minx, maxy - miny, 1.0)
+    return (minx - pad, miny - pad, maxx + pad, maxy + pad)
+
+
+def bbox_pruner(px: np.ndarray, py: np.ndarray, zone_rings: list, eps: float = 1e-9):
+    """Sort the points by x once; return ``candidates(k)``, the indices
+    of the points inside zone k's padded bbox (:func:`rings_bbox`) — an
+    x-range by ``searchsorted`` plus a y mask.  Every point it drops
+    fails both the parity and the boundary test of zone k, so running a
+    ring kernel on the candidates alone gives bit-identical per-point
+    results (the kernels are elementwise)."""
+    order = np.argsort(px, kind="stable")
+    sx, sy = px[order], py[order]
+    boxes = [rings_bbox(r, eps) for r in zone_rings]
+
+    def candidates(k: int) -> np.ndarray:
+        box = boxes[k]
+        if box is None:
+            return order[:0]
+        minx, miny, maxx, maxy = box
+        lo = np.searchsorted(sx, minx, "left")
+        hi = np.searchsorted(sx, maxx, "right")
+        ys = sy[lo:hi]
+        return order[lo:hi][(ys >= miny) & (ys <= maxy)]
+
+    return candidates
+
+
 def assign_cells_rings(
     px: np.ndarray,
     py: np.ndarray,
@@ -250,14 +296,17 @@ def assign_cells_rings(
 ) -> np.ndarray:
     """Ring-list version of ``assign_cells``: each point -> zone id
     (-1 = unassigned), ascending-id application so later ids overwrite
-    (reference last-wins loop, disaggregate.py:136-145)."""
+    (reference last-wins loop, disaggregate.py:136-145).  Each zone's
+    claim kernel runs only on the points inside its padded bbox."""
     px = np.asarray(px, dtype=np.float64)
     py = np.asarray(py, dtype=np.float64)
     out = np.full(px.shape, -1, dtype=np.int64)
+    candidates = bbox_pruner(px, py, zone_rings)
     order = np.argsort(np.asarray(zone_ids, dtype=np.int64), kind="stable")
     for k in order:
-        mask = claims_raster_cell_rings(px, py, zone_rings[k])
-        out[mask] = zone_ids[k]
+        idx = candidates(k)
+        if len(idx):
+            out[idx[claims_raster_cell_rings(px[idx], py[idx], zone_rings[k])]] = zone_ids[k]
     return out
 
 
@@ -269,16 +318,19 @@ def assign_points_within_rings(
 ) -> tuple[np.ndarray, np.ndarray]:
     """Ring-list version of ``assign_points_within``: (lowest-matching
     zone id or -1, match count) per point under the strict ``within``
-    rule."""
+    rule, bbox-pruned like :func:`assign_cells_rings`."""
     px = np.asarray(px, dtype=np.float64)
     py = np.asarray(py, dtype=np.float64)
     out = np.full(px.shape, -1, dtype=np.int64)
     hits = np.zeros(px.shape, dtype=np.int64)
+    candidates = bbox_pruner(px, py, zone_rings)
     order = np.argsort(np.asarray(zone_ids, dtype=np.int64), kind="stable")
     for k in order[::-1]:  # reverse so the FIRST (lowest id) hit wins
-        mask = points_within_rings(px, py, zone_rings[k])
-        out[mask] = zone_ids[k]
-        hits += mask.astype(np.int64)
+        idx = candidates(k)
+        if len(idx):
+            idx = idx[points_within_rings(px[idx], py[idx], zone_rings[k])]
+            out[idx] = zone_ids[k]
+            hits[idx] += 1
     return out, hits
 
 

@@ -1,11 +1,16 @@
 """Zonal aggregation operators (reference src/gregor/aggregate.py).
 
 Both collapse to: assignment → ``groupBy(zone_id).agg(...)`` → left join
-back onto the zone list.  One shuffle (the agg); the assignment itself is
-shuffle-free on the broadcast path.  Partial aggregation (map-side
-combine) is automatic for sum/count/min/max/mean, so the shuffle moves
-O(zones) rows, not O(cells) — the property that keeps this viable at
-100 TB.
+back onto the zone list.
+
+Scale shape: one shuffle (the agg); the assignment itself is
+shuffle-free on the broadcast path, and the O(zones) aggregate is
+broadcast into the join back.  Partial aggregation (map-side combine) is
+automatic for sum/count/min/max/mean, so the shuffle moves O(zones)
+rows, not O(cells) — the property that keeps this viable at 100 TB.
+Cells that already carry an assignment tag for the same zones (the
+output of ``disaggregate_polygon_to_raster``) are not assigned again, so
+the disaggregate → aggregate round trip runs no Python pass here.
 """
 
 from __future__ import annotations
@@ -107,7 +112,7 @@ def aggregate_raster_to_polygon(
             "majority/minority/unique/percentile_<q>"
         )
     zone_ids = zones.values_df_ids(cells.sparkSession)
-    return zone_ids.join(agg, "zone_id", "left").select("zone_id", out)
+    return zone_ids.join(F.broadcast(agg), "zone_id", "left").select("zone_id", out)
 
 
 def aggregate_point_to_polygon(
@@ -134,4 +139,4 @@ def aggregate_point_to_polygon(
     assigned = explode_points_within_df(points, zones, x=x, y=y)
     agg = assigned.groupBy("zone_id").agg(_STATS[aggfunc](F.col(value)).alias(out))
     zone_ids = zones.values_df_ids(points.sparkSession)
-    return zone_ids.join(agg, "zone_id", "left").select("zone_id", out)
+    return zone_ids.join(F.broadcast(agg), "zone_id", "left").select("zone_id", out)

@@ -18,6 +18,18 @@ Two physical strategies (SURVEY.md §4):
 
 Both produce identical assignments (determinism test in
 tests/test_spatial_join.py).
+
+Scale shape: one Arrow-batched Python pass per assignment, and an
+assignment that is already valid is reused instead of recomputed.
+``assign_cells_df`` tags ``x``, ``y`` and the zone column with Spark
+column metadata naming the zone set (its geometry digest), the rule and
+the axis; those tags ride along through selects, filters, joins and
+parquet round trips, while any recomputed column loses them.  An input
+whose columns carry the tags for the same zone set skips the pass, so a
+disaggregate → aggregate round trip crosses into Python twice (the
+assignment and the normalization sums of ``disaggregate_polygon_to_raster``)
+instead of three times.  Inside a batch the kernels sort the points by x
+once and test each zone only against the points in its padded bbox.
 """
 
 from __future__ import annotations
@@ -33,8 +45,45 @@ from ..geo import kernels as K
 from ..model.zones import ZoneSet
 
 
+#: column-metadata keys of an assignment tag (see :func:`assign_cells_df`)
+TAG_ZONES, TAG_RULE, TAG_AXIS = "gregor.zones", "gregor.rule", "gregor.axis"
+
+
 def _with_long_col(schema: T.StructType, name: str) -> T.StructType:
     return T.StructType(schema.fields + [T.StructField(name, T.LongType(), True)])
+
+
+def _tagged(schema: T.StructType, digest: str, axes: dict) -> T.StructType:
+    """``schema`` with the raster-rule assignment tag on each column named
+    in ``axes`` (column name -> axis), merged into its metadata."""
+    return T.StructType([
+        T.StructField(
+            f.name,
+            f.dataType,
+            f.nullable,
+            {**f.metadata, TAG_ZONES: digest, TAG_RULE: "raster", TAG_AXIS: axes[f.name]},
+        )
+        if f.name in axes
+        else f
+        for f in schema.fields
+    ])
+
+
+def _is_assigned(df: DataFrame, digest: str, x: str, y: str, out: str) -> bool:
+    """True iff ``x``, ``y`` and ``out`` carry the tags that
+    :func:`_tagged` writes for the zone set with geometry digest
+    ``digest`` (``ZoneSet._geom_digest``), each naming its own axis."""
+    fields = {f.name: f for f in df.schema.fields}
+    for name, axis in ((x, "x"), (y, "y"), (out, "zone")):
+        md = fields[name].metadata if name in fields else {}
+        if (md.get(TAG_ZONES), md.get(TAG_RULE), md.get(TAG_AXIS)) != (digest, "raster", axis):
+            return False
+    return True
+
+
+def _zone_ids(zid: np.ndarray) -> pd.arrays.IntegerArray:
+    """Kernel output (-1 = unassigned) as a nullable Int64 column."""
+    return pd.arrays.IntegerArray(zid, zid < 0)
 
 
 def assign_cells_df(
@@ -50,28 +99,75 @@ def assign_cells_df(
     Adds ``out`` (nullable long).  With ``keep_unassigned=False`` rows in
     no zone are dropped (the inner-join semantics most downstream ops
     want; reference drops them via ``dropna`` at disaggregate.py:52).
+
+    ``x``, ``y`` and ``out`` of the result carry the assignment tag
+    (module docstring).  An input already tagged for ``zones`` on these
+    three columns is returned as is (after the ``keep_unassigned``
+    filter): its ``out`` is exactly what this pass would compute.  The
+    tag is a promise about column values, so code that rewrites one of
+    them through a plain rename or alias must drop the column's metadata.
     """
+    digest = zones._geom_digest()
+    if _is_assigned(df, digest, x, y, out):
+        return df if keep_unassigned else df.filter(df[out].isNotNull())
     ids = zones.zone_ids
     rings = zones.rings_list()
     if out in df.columns:  # re-assignment replaces a stale column
         df = df.drop(out)
-    schema = _with_long_col(df.schema, out)
-    names = [f.name for f in schema.fields]
+    schema = _tagged(_with_long_col(df.schema, out), digest, {x: "x", y: "y", out: "zone"})
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             zid = K.assign_cells_rings(
                 pdf[x].to_numpy(np.float64), pdf[y].to_numpy(np.float64), ids, rings
             )
-            res = pdf.copy()
-            res[out] = pd.array(zid, dtype="Int64")
-            res.loc[zid < 0, out] = pd.NA
-            yield res[names]
+            pdf[out] = _zone_ids(zid)
+            yield pdf
 
     result = df.mapInPandas(run, schema=schema)
     if not keep_unassigned:
         result = result.filter(result[out].isNotNull())
     return result
+
+
+def zone_sums_df(
+    df: DataFrame,
+    zones: ZoneSet,
+    value: str,
+    x: str = "x",
+    y: str = "y",
+    out: str = "zone_id",
+    total: str = "total",
+) -> DataFrame:
+    """Per-zone sums of ``value`` under the raster rule, in ONE Python
+    pass that returns O(zones) rows per Arrow batch instead of every
+    cell: each batch yields its ``(out, partial sum)`` rows, and a
+    ``groupBy(out)`` adds the partials.  Only ``x``, ``y`` and ``value``
+    cross into Python.  Nulls are skipped as ``F.sum`` skips them; a zone
+    whose values are all null sums to null; zones without cells are
+    absent."""
+    from pyspark.sql import functions as F
+
+    ids = zones.zone_ids
+    rings = zones.rings_list()
+    schema = T.StructType([
+        T.StructField(out, T.LongType(), False),
+        T.StructField(total, T.DoubleType(), True),
+    ])
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            zid = K.assign_cells_rings(
+                pdf[x].to_numpy(np.float64), pdf[y].to_numpy(np.float64), ids, rings
+            )
+            hit = zid >= 0
+            part = pdf[value][hit].astype(np.float64).groupby(zid[hit]).sum(min_count=1)
+            yield pd.DataFrame({
+                out: part.index.to_numpy(np.int64), total: part.to_numpy(np.float64)
+            })
+
+    parts = df.select(x, y, value).mapInPandas(run, schema=schema)
+    return parts.groupBy(out).agg(F.sum(total).alias(total))
 
 
 def assign_points_within_df(
@@ -95,18 +191,15 @@ def assign_points_within_df(
         if c in df.columns:
             df = df.drop(c)
     schema = _with_long_col(_with_long_col(df.schema, out), hits)
-    names = [f.name for f in schema.fields]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             zid, n = K.assign_points_within_rings(
                 pdf[x].to_numpy(np.float64), pdf[y].to_numpy(np.float64), ids, rings
             )
-            res = pdf.copy()
-            res[out] = pd.array(zid, dtype="Int64")
-            res.loc[zid < 0, out] = pd.NA
-            res[hits] = pd.array(n, dtype="Int64")
-            yield res[names]
+            pdf[out] = _zone_ids(zid)
+            pdf[hits] = n
+            yield pdf
 
     return df.mapInPandas(run, schema=schema)
 
@@ -132,23 +225,20 @@ def explode_points_within_df(
     if out in df.columns:
         df = df.drop(out)
     schema = _with_long_col(df.schema, out)
-    names = [f.name for f in schema.fields]
     order = np.argsort(np.asarray(ids, dtype=np.int64), kind="stable")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             px = pdf[x].to_numpy(np.float64)
             py = pdf[y].to_numpy(np.float64)
+            candidates = K.bbox_pruner(px, py, rings)
             parts = []
             for k in order:
-                mask = K.points_within_rings(px, py, rings[k])
-                if mask.any():
-                    res = pdf.loc[mask].copy()
-                    res[out] = pd.array(
-                        np.full(int(mask.sum()), ids[k], dtype=np.int64),
-                        dtype="Int64",
-                    )
-                    parts.append(res[names])
+                idx = candidates(k)
+                idx = np.sort(idx[K.points_within_rings(px[idx], py[idx], rings[k])])
+                if len(idx):
+                    zid = np.full(len(idx), ids[k], dtype=np.int64)
+                    parts.append(pdf.iloc[idx].assign(**{out: _zone_ids(zid)}))
             if parts:
                 yield pd.concat(parts, ignore_index=True)
 

@@ -9,7 +9,12 @@ the reference (test_disaggregate.py:29-31) and by tests/ here.
 
 Scale shape: 2 shuffles max — the normalization groupBy (partial-agg,
 O(zones) rows moved) and its join back (broadcast: norms are O(zones)).
-Fact-side data never shuffles on the broadcast assignment path.
+Fact-side data never shuffles on the broadcast assignment path.  The
+raster path crosses into Python twice: the tagged assignment of every
+cell, and the normalization pass (``zone_sums_df``) that ships only
+``(x, y, proxy)`` in and per-batch zone sums out.  Its output keeps the
+assignment tags, so ``aggregate_raster_to_polygon`` over the same zones
+reuses the assignment instead of running a third pass.
 """
 
 from __future__ import annotations
@@ -18,7 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..model.zones import ZoneSet
-from .assign import assign_cells_df, assign_points_within_df
+from .assign import assign_cells_df, assign_points_within_df, zone_sums_df
 
 
 class DisaggregationError(ValueError):
@@ -60,9 +65,7 @@ def disaggregate_polygon_to_raster(
         )
         zones = reproject_zones(zones, data_crs, proxy_crs)
     assigned = assign_cells_df(proxy_cells, zones, keep_unassigned=False)
-    norm = assigned.groupBy("zone_id").agg(
-        F.sum(proxy_column).alias("_norm")
-    )
+    norm = zone_sums_df(proxy_cells, zones, proxy_column, total="_norm")
     zvals = zones.values_df(spark, "_zone_value")
     result = (
         assigned.join(F.broadcast(norm), "zone_id")
@@ -304,10 +307,6 @@ def disaggregate_polygon_to_polygon(
     clip kernel and returned as a DataFrame.  (For massive zone sets the
     same shape runs as a cover-join, see spatial_join.py.)
     """
-    import numpy as np
-
-    from ..geo import kernels as K
-
     rows = []
     src_rings = src_zones.rings_list()
     tgt_rings = tgt_zones.rings_list()
@@ -318,11 +317,9 @@ def disaggregate_polygon_to_polygon(
                 rows.append((int(sz), int(tz), float(a)))
     if not rows:
         raise DisaggregationError("no source/target intersections")
-    arr = np.asarray([r[2] for r in rows])
     by_src: dict[int, float] = {}
     for (s, _t, a) in rows:
         by_src[s] = by_src.get(s, 0.0) + a
-    del arr
     out = [
         (
             s,

@@ -89,10 +89,11 @@ def main() -> None:
         (
             "Disaggregation (polygon→raster)",
             "The reference's O(polygons) accumulation loop as one plan: "
-            "assignment → partial-agg normalization → two BroadcastHashJoins "
-            "(norms and zone values are O(zones)) → ratio arithmetic.  No "
-            "SortMergeJoin; the fact side shuffles only for the O(zones) "
-            "normalization aggregate.",
+            "tagged assignment → two BroadcastHashJoins (norms and zone "
+            "values are O(zones)) → ratio arithmetic.  The norms come from "
+            "a second MapInPandas that reads only (x, y, value) and returns "
+            "per-batch zone sums, so the shuffle moves O(zones) rows.  No "
+            "SortMergeJoin.",
             formatted(disaggregate_polygon_to_raster(zones, cells)),
         )
     )

@@ -329,3 +329,137 @@ def test_general_rings_holed_concave():
     #   L upper arm = [0,1]x[1,3] -> [0,1]x[1,2] area 1 ; lower 3x1=3
     # minus hole (entirely inside [0,3]x[0,1] and inside clip): 0.5*0.5
     assert got == pytest.approx(3.0 + 1.0 - 0.25, rel=1e-12)
+
+
+# ------------------------------------------ bbox-pruned kernels vs brute force
+#
+# ``assign_cells_rings`` / ``assign_points_within_rings`` test each zone
+# only against the points inside its padded bbox.  The references below
+# run the per-zone kernel on EVERY point; the pruned results must match
+# them exactly.
+
+
+def _brute_cells(px, py, ids, rings):
+    out = np.full(len(px), -1, dtype=np.int64)
+    for k in np.argsort(np.asarray(ids, dtype=np.int64), kind="stable"):
+        out[K.claims_raster_cell_rings(px, py, rings[k])] = ids[k]
+    return out
+
+
+def _brute_within(px, py, ids, rings):
+    out = np.full(len(px), -1, dtype=np.int64)
+    hits = np.zeros(len(px), dtype=np.int64)
+    for k in np.argsort(np.asarray(ids, dtype=np.int64), kind="stable")[::-1]:
+        m = K.points_within_rings(px, py, rings[k])
+        out[m] = ids[k]
+        hits += m
+    return out, hits
+
+
+def _assert_parity(px, py, ids, rings):
+    px = np.asarray(px, dtype=np.float64)
+    py = np.asarray(py, dtype=np.float64)
+    np.testing.assert_array_equal(
+        K.assign_cells_rings(px, py, ids, rings), _brute_cells(px, py, ids, rings)
+    )
+    got_z, got_n = K.assign_points_within_rings(px, py, ids, rings)
+    want_z, want_n = _brute_within(px, py, ids, rings)
+    np.testing.assert_array_equal(got_z, want_z)
+    np.testing.assert_array_equal(got_n, want_n)
+
+
+def _boundary_points(rings, offsets=(0.0,)):
+    """Every vertex and edge midpoint of ``rings``, each shifted by every
+    ``offsets`` value along x and along y."""
+    bx, by = [], []
+    for per_zone in rings:
+        for xs, ys, _hole in per_zone:
+            x2, y2 = np.roll(xs, -1), np.roll(ys, -1)
+            bx.extend([xs, (xs + x2) / 2])
+            by.extend([ys, (ys + y2) / 2])
+    bx, by = np.concatenate(bx), np.concatenate(by)
+    px = [bx + d for d in offsets] + [bx for d in offsets]
+    py = [by for d in offsets] + [by + d for d in offsets]
+    return np.concatenate(px), np.concatenate(py)
+
+
+def _star_zones(rng, n, holes=False):
+    """n overlapping, non-convex star polygons (ids shuffled); with
+    ``holes`` every other zone gets a hole and a second exterior part."""
+    ids = rng.permutation(np.arange(n) * 3 + 5)
+    rings = []
+    for k in range(n):
+        cx, cy = rng.uniform(0, 4, 2)
+        ang = np.sort(rng.uniform(0, 2 * np.pi, 9))
+        r = rng.uniform(0.3, 1.5, 9)
+        zone = [(cx + r * np.cos(ang), cy + r * np.sin(ang), False)]
+        if holes and k % 2 == 0:
+            zone.append((cx + 0.1 * np.array([-1, 1, 1, -1]),
+                         cy + 0.1 * np.array([-1, -1, 1, 1]), True))
+            zone.append((cx + 3 + np.array([0, 0.5, 0.5, 0]),
+                         cy + np.array([0, 0, 0.5, 0.5]), False))
+        rings.append(zone)
+    return ids, rings
+
+
+@pytest.mark.parametrize(
+    "seg",
+    [FX.SEG_2X2, FX.SEG_3X3, FX.SEG_OVERLAP, FX.SEG_HOLED],
+    ids=["2x2", "3x3", "overlap", "holed"],
+)
+def test_pruned_kernels_match_brute_force_on_fixtures(seg):
+    """Golden-fixture pixel centres, plus every vertex and edge midpoint
+    of the fixture (shared edges and vertices), exactly and within
+    1e-10 .. 2e-9 of the boundary on both sides."""
+    ids = np.array([z.zone_id for z in seg], dtype=np.int64)
+    rings = _rings_of(seg)
+    cells = FX.raster_long_form()
+    _assert_parity([c[2] for c in cells], [c[3] for c in cells], ids, rings)
+    offsets = (0.0, 1e-10, -1e-10, 1e-9, -1e-9, 2e-9, -2e-9)
+    _assert_parity(*_boundary_points(rings, offsets), ids, rings)
+    # 3x3 grid-line intersections: every shared vertex of the tessellation
+    gx, gy = np.meshgrid(np.arange(-0.25, 2.0, 0.25), np.arange(9.75, 12.0, 0.25))
+    _assert_parity(gx.ravel(), gy.ravel(), ids, rings)
+
+
+@pytest.mark.parametrize("holes", [False, True], ids=["simple", "holed_multipart"])
+def test_pruned_kernels_match_brute_force_random(holes):
+    """Random overlapping, non-convex zones with unsorted ids; random
+    points in and around them plus points on and next to every edge."""
+    rng = np.random.default_rng(7 + holes)
+    ids, rings = _star_zones(rng, 12, holes)
+    px, py = rng.uniform(-2, 9, 4000), rng.uniform(-2, 6, 4000)
+    _assert_parity(px, py, ids, rings)
+    bx, by = _boundary_points(rings, (0.0, 1e-10, -1e-10, 1e-9, -1e-9))
+    _assert_parity(bx, by, ids, rings)
+    # the same points, the same zones in another order
+    perm = rng.permutation(len(ids))
+    _assert_parity(bx, by, ids[perm], [rings[k] for k in perm])
+
+
+def test_pruned_kernels_edge_cases():
+    """No points, a zone without vertices, a zone with a NaN vertex, NaN
+    points, and a zone far from every point."""
+    square = [(np.array([0.0, 1, 1, 0]), np.array([0.0, 0, 1, 1]), False)]
+    far = [(np.array([50.0, 51, 51]), np.array([50.0, 50, 51]), False)]
+    empty = [(np.array([]), np.array([]), False)]
+    nan = [(np.array([0.0, 2, np.nan, 0]), np.array([0.0, 0, 2, 2]), False)]
+    ids = np.array([2, 1, 0, 3], dtype=np.int64)
+    rings = [square, far, empty, nan]
+    _assert_parity([], [], ids, rings)
+    px = np.r_[0.5, np.nan, 1.0, 0.0, np.linspace(-1, 3, 41)]
+    py = np.r_[0.5, 0.5, np.nan, 0.0, np.linspace(3, -1, 41)]
+    _assert_parity(px, py, ids, rings)
+    got = K.assign_cells_rings(np.array([0.5, 50.9]), np.array([0.5, 50.1]), ids, rings)
+    np.testing.assert_array_equal(got, [2, 1])
+
+
+def test_rings_bbox_covers_boundary_tolerance():
+    """The padded bbox reaches at least the boundary tolerance past the
+    rings on every side, and further for large zones."""
+    ring = [(np.array([0.0, 1, 1, 0]), np.array([0.0, 0, 1, 1]), False)]
+    minx, miny, maxx, maxy = K.rings_bbox(ring)
+    assert minx <= -1e-9 and miny <= -1e-9 and maxx >= 1 + 1e-9 and maxy >= 1 + 1e-9
+    big = [(np.array([0.0, 1e6, 1e6, 0]), np.array([0.0, 0, 1e6, 1e6]), False)]
+    assert K.rings_bbox(big)[0] <= -1e-3
+    assert K.rings_bbox([(np.array([]), np.array([]), False)]) is None

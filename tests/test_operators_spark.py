@@ -4,7 +4,9 @@ row-for-row through the DataFrame engine)."""
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
+from gregor_spark.geo import kernels as K
 from gregor_spark.model import fixtures as FX
 from gregor_spark.model.raster import RasterMeta, collect_to_grid, raster_df, uniform_proxy_df, clip_bbox
 from gregor_spark.model.zones import ZoneSet
@@ -12,7 +14,12 @@ from gregor_spark.operators.aggregate import (
     aggregate_point_to_polygon,
     aggregate_raster_to_polygon,
 )
-from gregor_spark.operators.assign import assign_cells_df
+from gregor_spark.operators.assign import (
+    assign_cells_df,
+    assign_points_within_df,
+    explode_points_within_df,
+    zone_sums_df,
+)
 from gregor_spark.operators.disaggregate import (
     DisaggregationError,
     disaggregate_polygon_to_point,
@@ -192,3 +199,153 @@ def test_uniform_proxy_and_clip(spark):
     assert rows[0]["value"] == 1.0
     clipped = clip_bbox(proxy, -0.25, 9.75, 0.75, 10.75)
     assert clipped.count() == 4  # the SW quadrant of centers
+
+
+# ------------------------------------------------ assignment reuse (tags)
+
+
+def _passes(df):
+    """Python assignment passes in ``df``'s physical plan."""
+    return df._jdf.queryExecution().executedPlan().toString().count("MapInPandas")
+
+
+def _zone_col(df):
+    return {(r["row"], r["col"]): r["zone_id"] for r in df.collect()}
+
+
+@pytest.fixture(scope="module")
+def fine_cells(spark):
+    """A 9x9 seeded proxy whose cell centres lie on a 0.25-degree lattice
+    over the fixture extent, so the fixtures' shared edges and vertices
+    pass through cell centres."""
+    rng = np.random.default_rng(3)
+    meta = RasterMeta(width=9, height=9, origin_x=-0.375, origin_y=11.875, pixel=0.25)
+    return raster_df(spark, meta, 0.5 + rng.random((9, 9))).cache()
+
+
+@pytest.mark.parametrize("seg", [FX.SEG_2X2, FX.SEG_3X3, FX.SEG_HOLED], ids=["2x2", "3x3", "holed"])
+def test_round_trip_plans_two_passes_and_conserves(spark, fine_cells, seg):
+    """disaggregate → aggregate over the same zones assigns each cell once
+    (plus the normalization pass) and returns every zone's value; the sums
+    equal those of a forced fresh assignment."""
+    zones = ZoneSet.from_fixture(seg, values={z.zone_id: 1.0 + z.zone_id for z in seg})
+    disagg = disaggregate_polygon_to_raster(zones, fine_cells)
+    assert _passes(disagg) == 2
+    trip = aggregate_raster_to_polygon(disagg, zones, "sum", value="disaggregated")
+    assert _passes(trip) == 2
+    got = {r["zone_id"]: r["sum_disaggregated"] for r in trip.collect()}
+    assert got == pytest.approx(zones.values, rel=1e-12)
+    fresh = aggregate_raster_to_polygon(
+        disagg.withColumn("x", F.col("x") + 0), zones, "sum", value="disaggregated"
+    )
+    assert _passes(fresh) == 3
+    want = {r["zone_id"]: r["sum_disaggregated"] for r in fresh.collect()}
+    assert got == pytest.approx(want, rel=1e-12)
+
+
+def test_assignment_reused_only_for_the_same_tags(spark, fine_cells):
+    """A tagged input skips the pass for its own zone set and is assigned
+    afresh for another zone set, for the ``within`` output, for swapped
+    x/y aliases and for a recomputed coordinate; every result matches a
+    fresh assignment of the plain cells."""
+    z2, z3 = ZoneSet.from_fixture(FX.SEG_2X2), ZoneSet.from_fixture(FX.SEG_3X3)
+    tagged = assign_cells_df(fine_cells, z2)
+    want2, want3 = _zone_col(tagged), _zone_col(assign_cells_df(fine_cells, z3))
+
+    again = assign_cells_df(tagged, z2)
+    assert _passes(again) == 1 and _zone_col(again) == want2
+    kept = assign_cells_df(tagged, z2, keep_unassigned=False)
+    assert _passes(kept) == 1
+    assert _zone_col(kept) == {k: v for k, v in want2.items() if v is not None}
+
+    other = assign_cells_df(tagged, z3)
+    assert _passes(other) == 2 and _zone_col(other) == want3
+
+    # tagged x/y, but zone_id now holds the strict-interior result
+    within = assign_points_within_df(tagged, z2)
+    redo = assign_cells_df(within, z2)
+    assert _passes(redo) == 3 and _zone_col(redo) == want2
+
+    swapped = tagged.select(
+        "row", "col", F.col("y").alias("x"), F.col("x").alias("y"), "value", "zone_id"
+    )
+    redo = assign_cells_df(swapped, z2)
+    assert _passes(redo) == 2
+    assert _zone_col(redo) == _zone_col(
+        assign_cells_df(swapped.withColumn("x", F.col("x") + 0), z2)
+    )
+
+    shifted = tagged.withColumn("x", F.col("x") + 0)
+    redo = assign_cells_df(shifted, z2)
+    assert _passes(redo) == 2 and _zone_col(redo) == want2
+
+
+def test_assignment_tags_survive_parquet(spark, fine_cells, tmp_path):
+    zones = ZoneSet.from_fixture(FX.SEG_3X3)
+    tagged = assign_cells_df(fine_cells, zones)
+    path = str(tmp_path / "assigned")
+    tagged.write.parquet(path)
+    back = spark.read.parquet(path)
+    assert back.schema["zone_id"].metadata["gregor.axis"] == "zone"
+    again = assign_cells_df(back, zones)
+    assert _passes(again) == 0
+    assert _zone_col(again) == _zone_col(tagged)
+
+
+def test_disaggregate_reuses_tagged_proxy(spark, fine_cells, tmp_path):
+    """A proxy stored with its assignment is not assigned again: only the
+    normalization pass runs, and the apportioned values equal those of
+    the plain proxy."""
+    zones = ZoneSet.from_fixture(FX.SEG_3X3, values={z: 2.0 + z for z in range(9)})
+    plain = disaggregate_polygon_to_raster(zones, fine_cells)
+    path = str(tmp_path / "proxy")
+    assign_cells_df(fine_cells, zones).write.parquet(path)
+    reused = disaggregate_polygon_to_raster(zones, spark.read.parquet(path))
+    assert _passes(reused) == 1
+
+    def vals(df):
+        return {(r["row"], r["col"]): r["disaggregated"] for r in df.collect()}
+
+    assert vals(reused) == pytest.approx(vals(plain), rel=1e-12)
+
+
+def test_zone_sums_df_matches_groupby_sum(spark):
+    """Partial per-batch sums add up to ``F.sum`` per zone, nulls skipped;
+    a zone whose proxies are all null sums to null."""
+    zones = ZoneSet.from_fixture(FX.SEG_2X2)
+    rng = np.random.default_rng(5)
+    rows = []
+    for i in range(400):
+        x, y = rng.uniform(-0.25, 1.75), rng.uniform(9.75, 11.75)
+        in_zone1 = x > 0.75 and y > 10.75
+        w = None if in_zone1 or i % 7 == 0 else float(rng.random())
+        rows.append((x, y, w))
+    df = spark.createDataFrame(rows, "x double, y double, w double").repartition(3)
+    got = {r["zone_id"]: r["total"] for r in zone_sums_df(df, zones, "w").collect()}
+    want = {
+        r["zone_id"]: r["s"]
+        for r in assign_cells_df(df, zones, keep_unassigned=False)
+        .groupBy("zone_id").agg(F.sum("w").alias("s")).collect()
+    }
+    assert want[1] is None and got[1] is None
+    assert got == pytest.approx(want, rel=1e-12)
+
+
+def test_explode_points_within_keeps_row_order(spark):
+    """One row per (point, containing zone), grouped by ascending zone id
+    and in input order within a zone, on overlapping zones."""
+    zones = ZoneSet.from_fixture(FX.SEG_OVERLAP)
+    rng = np.random.default_rng(11)
+    pts = [(i, float(x), float(y)) for i, (x, y) in enumerate(
+        zip(rng.uniform(-0.5, 2.0, 300), rng.uniform(9.5, 12.0, 300))
+    )]
+    df = spark.createDataFrame(pts, "pid long, x double, y double").coalesce(1)
+    got = [(r["zone_id"], r["pid"]) for r in explode_points_within_df(df, zones).collect()]
+    px = np.array([p[1] for p in pts])
+    py = np.array([p[2] for p in pts])
+    want = [
+        (int(z), i)
+        for z, rings in sorted(zip(zones.zone_ids, zones.rings_list()), key=lambda t: t[0])
+        for i in np.flatnonzero(K.points_within_rings(px, py, rings))
+    ]
+    assert got == want
